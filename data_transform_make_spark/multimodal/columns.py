@@ -13,13 +13,14 @@ Design (the part that matters at 100 TB):
     tasks stay memory-bounded.
 
 The actual image/audio decode libraries are NOT in this container, so the
-DEFAULT decode kernel is a clearly-marked deterministic STUB (sha-seeded
+decode and resize kernels are clearly-marked deterministic STUBS (sha-seeded
 fake pixels — also what the mm2b/mm4b SQL twins certify); the Spark-side
 plumbing — schema, batch iteration, UDF signatures, partitioning — is real
-and tested. Where Pillow IS installed, ``kernel='pil'``/``'auto'`` runs
-real decodes/resizes through the identical mapInPandas plumbing (the
-import-gated-adapter pattern, same as sinks.merge_upsert_path; tests for
-the real leg are importorskip-gated).
+and tested. A real decoder plugs in at the per-row kernels: replace
+``_stub_decode`` (payload -> (width, height, n_channels)) and the resize
+stage's ``fake_resize`` (payload -> resized bytes) with e.g. Pillow's
+``Image.open``/``Image.resize``; the mapInPandas plumbing around them stays
+unchanged. ffmpeg (video) frame sampling is a byte-slicing stub likewise.
 """
 
 from __future__ import annotations
@@ -83,21 +84,6 @@ def attach_media_metadata(media: DataFrame) -> DataFrame:
 
 _DECODE_SCHEMA = "media_id long, media_type string, width int, height int, n_channels int"
 
-# Real-kernel availability probe (the merge_upsert_path pattern: use the
-# real library when importable, the documented deterministic stub
-# otherwise). Pillow is absent from this container; the adapter keeps the
-# call shape identical so a cluster with Pillow installed runs real
-# decodes with zero code change. ffmpeg (video) has no Python-only
-# fallback — frame sampling stays a byte-slicing stub either way.
-try:  # pragma: no cover - exercised only where Pillow is installed
-    from PIL import Image as _PILImage
-
-    _HAVE_PIL = True
-except ImportError:
-    _PILImage = None
-    _HAVE_PIL = False
-
-
 def _stub_decode(payload: bytes | None) -> tuple[int, int, int]:
     """STUB decode — deterministic fake dimensions derived from content.
     Keeps the pipeline testable end-to-end (and SQL-twinnable: mm2b) in
@@ -108,57 +94,19 @@ def _stub_decode(payload: bytes | None) -> tuple[int, int, int]:
     return (64 + h[0] % 192, 64 + h[1] % 192, 3)
 
 
-def _pil_decode(payload: bytes | None) -> tuple[int, int, int]:
-    """REAL decode via Pillow: actual width/height/bands; undecodable or
-    missing payloads degrade to (0, 0, 0) — the dead-letter convention,
-    filterable downstream without killing the batch.
-
-    The Pillow-missing check re-runs HERE, executor-side: _pick_kernel's
-    check runs on the driver, and a mismatched deployment (Pillow on the
-    driver image, absent on executors) must fail the task loudly — the
-    blanket except below would otherwise silently dead-letter EVERY row
-    (review round 6)."""
-    if _PILImage is None:
-        raise ImportError("Pillow present on driver but missing on executor")
-    if payload is None:
-        return (0, 0, 0)
-    import io
-
-    try:
-        with _PILImage.open(io.BytesIO(payload)) as im:
-            return (im.width, im.height, len(im.getbands()))
-    except Exception:
-        return (0, 0, 0)
-
-
-def _pick_kernel(kernel: str):
-    """Resolve a decode kernel name: 'stub' (deterministic, default for
-    the oracle-checked corpus entries), 'pil' (require Pillow), 'auto'
-    (Pillow when importable, stub otherwise)."""
-    if kernel == "pil" and not _HAVE_PIL:
-        raise ImportError("kernel='pil' requires Pillow")
-    if kernel == "stub" or (kernel == "auto" and not _HAVE_PIL):
-        return _stub_decode
-    if kernel in ("pil", "auto"):
-        return _pil_decode
-    raise ValueError(f"unknown kernel {kernel!r}")
-
-
-def decode_images(media: DataFrame, kernel: str = "stub") -> DataFrame:
+def decode_images(media: DataFrame) -> DataFrame:
     """Decode stage: Arrow-batched ``mapInPandas``; one batch in, one out.
 
     At scale this is the canonical Python-boundary shape: the binary column
     crosses to the worker once per batch (Arrow), the kernel is pure
     per-row CPU, output is a narrow typed frame (blobs dropped as early as
-    possible so downstream stages shuffle metadata, not pixels).
-    ``kernel``: 'stub' (default — deterministic, what mm2/mm2b certify),
-    'pil' or 'auto' for real Pillow decodes where installed.
+    possible so downstream stages shuffle metadata, not pixels). The
+    kernel is the deterministic stub — what mm2/mm2b certify.
     """
-    decode = _pick_kernel(kernel)
 
     def kfn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            dims = pdf["payload"].map(decode)
+            dims = pdf["payload"].map(_stub_decode)
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -206,51 +154,26 @@ _RESIZE_SCHEMA = (
 
 
 def resize_images(
-    media: DataFrame, target: tuple[int, int] = (32, 32), kernel: str = "stub"
+    media: DataFrame, target: tuple[int, int] = (32, 32)
 ) -> DataFrame:
-    """Resize stage: ``kernel='stub'`` (default — deterministic byte-grid
-    seeded by the content digest, what mm4/mm4b certify) or ``'pil'`` /
-    ``'auto'`` for a real ``Image.resize`` re-encoded as PNG where Pillow
-    is installed (undecodable payloads degrade to b''). Arrow-batched
+    """Resize stage: deterministic byte-grid seeded by the content digest
+    (the stub kernel — what mm4/mm4b certify). Arrow-batched
     ``mapInPandas``; output carries both source and target dims so
     downstream filters (e.g. drop tiny sources) stay in-plan."""
     tw, th = target
     if tw < 1 or th < 1:
-        # a zero-area target silently yields b'' for every row under the
-        # stub (and a Pillow error per row under the real kernel)
+        # a zero-area target silently yields b'' for every row
         raise ValueError(f"resize_images: target must be >= 1x1, got {target!r}")
-    decode = _pick_kernel(kernel)
-    use_pil = decode is _pil_decode
+
+    def fake_resize(p: bytes | None) -> bytes:
+        if p is None:
+            return b""
+        h = hashlib.sha256(p).digest()
+        return bytes((h[(i * 7) % 32]) for i in range(tw * th))[: tw * th]
 
     def kfn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            dims = pdf["payload"].map(decode)
-
-            def fake_resize(p: bytes | None) -> bytes:
-                if p is None:
-                    return b""
-                h = hashlib.sha256(p).digest()
-                return bytes((h[(i * 7) % 32]) for i in range(tw * th))[: tw * th]
-
-            def pil_resize(p: bytes | None) -> bytes:
-                # executor-side Pillow check — same rationale as _pil_decode
-                if _PILImage is None:
-                    raise ImportError(
-                        "Pillow present on driver but missing on executor"
-                    )
-                if p is None:
-                    return b""
-                import io
-
-                try:
-                    with _PILImage.open(io.BytesIO(p)) as im:
-                        out = io.BytesIO()
-                        im.resize((tw, th)).save(out, format="PNG")
-                        return out.getvalue()
-                except Exception:
-                    return b""
-
-            resize = pil_resize if use_pil else fake_resize
+            dims = pdf["payload"].map(_stub_decode)
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -258,7 +181,7 @@ def resize_images(
                     "height": dims.map(lambda d: d[1]).astype("int32"),
                     "target_width": pd.array([tw] * len(pdf), dtype="int32"),
                     "target_height": pd.array([th] * len(pdf), dtype="int32"),
-                    "resized_bytes": pdf["payload"].map(resize),
+                    "resized_bytes": pdf["payload"].map(fake_resize),
                 }
             )
 

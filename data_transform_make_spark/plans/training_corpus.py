@@ -95,55 +95,6 @@ def hash_split(id_col, train_cut: int = SPLIT_TRAIN_CUT):
     ).otherwise("eval")
 
 
-# One-slot memo for decontamination_report: holds AT MOST one
-# (report, shingled-projection) pair of persisted frames session-wide —
-# materialized-view semantics. A decontamination report over an unchanged
-# corpus is a fixpoint: repeated calls (re-runs, dashboards, the bench)
-# reuse the cached tiny report outright; the projection backs its first
-# materialization (it feeds three consumers — without it the corpus is
-# re-scanned and the shingle expressions re-run per consumer). A report
-# over a DIFFERENT corpus releases the previous pair first, so cache never
-# accumulates per distinct input (the round-5 hygiene invariant, kept —
-# just with a bounded working set of one pair instead of zero; round 5's
-# per-call eager-checkpoint version re-paid the full projection cost every
-# call, a measured 1.9x bench regression). ``sameResult`` on the analyzed
-# plans is the exact equivalence CacheManager itself uses — no hash
-# collisions, no false sharing.
-_DECON_MEMO: list[DataFrame] = []
-
-
-def release_decontamination_cache() -> None:
-    """Release the decontamination memo slot (e.g. at tenant switch).
-
-    unpersist is best-effort: frames memoized under an already-stopped
-    SparkSession raise from the dead JVM handle — the slot must still
-    empty so the next call under a fresh session recomputes cleanly
-    (crash reproduced in review: stop session A, call under session B)."""
-    while _DECON_MEMO:
-        df = _DECON_MEMO.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def _memo_lookup(out: DataFrame) -> DataFrame | None:
-    if not _DECON_MEMO:
-        return None
-    prev = _DECON_MEMO[0]
-    try:
-        if (
-            prev._jdf.queryExecution()
-            .analyzed()
-            .sameResult(out._jdf.queryExecution().analyzed())
-        ):
-            return prev
-    except Exception:  # session restarted / plan not comparable
-        pass
-    release_decontamination_cache()
-    return None
-
-
 def decontamination_report(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -178,12 +129,10 @@ def decontamination_report(
     # The shingled projection feeds three consumers (train shingles, eval
     # vocabulary, per-doc totals); without materialization each one
     # re-scans the corpus and re-runs the shingle expressions (audited:
-    # 4 parquet scans). persist() collapses that to one pass, held in the
-    # ONE-SLOT memo above: repeated reports over the same corpus reuse the
-    # materialized projection (the dominant cost — round 5's per-call
-    # eager-checkpoint hygiene re-paid it every call, a measured 1.9x
-    # regression), while a different corpus evicts the slot first so cache
-    # stays bounded. The 100 TB equivalent is checkpointing the shingled
+    # 4 parquet scans). Under eager=True one eager_cut collapses that to
+    # one pass — the same cut _curation_base makes for the builders, with
+    # nothing left in the CacheManager or held session-wide after the
+    # call. The 100 TB equivalent is checkpointing the shingled
     # projection to Parquet, or accepting ~3 column-pruned scans if
     # storage is tighter than compute.
     # _spread first: a single-file corpus scan otherwise pins the
@@ -192,53 +141,40 @@ def decontamination_report(
     base = _spread(docs, id_col).select(
         F.col(id_col), split.alias("__split"), sh_arr.alias("__shs")
     )
-
-    def report_plan(b: DataFrame) -> DataFrame:
-        train_sh = (
-            b.filter(F.col("__split") == "train")
-            .select(F.col(id_col), F.explode("__shs").alias("__sh"))
-        )
-        # NO broadcast hint, deliberately (review round 6): with the
-        # hash_split eval side this vocabulary is ~20% of the corpus'
-        # distinct shingles — a forced broadcast dies at the 8 GB cap /
-        # OOMs the driver exactly at the 100 TB design point. AQE
-        # converts the join to a broadcast at runtime from its MEASURED
-        # size, which is the safe version of the same optimization (and
-        # the production decontamination case — a fixed small benchmark
-        # suite as the eval side — still gets the broadcast from AQE).
-        eval_sh = (
-            b.filter(F.col("__split") == "eval")
-            .select(F.explode("__shs").alias("__sh"))
-            .distinct()
-        )
-        sizes = b.filter(F.col("__split") == "train").select(
-            F.col(id_col), F.size("__shs").alias("__n")
-        )
-        shared = (
-            train_sh.join(eval_sh, "__sh")
-            .groupBy(id_col)
-            .agg(F.count("*").alias("n_shared"))
-        )
-        return shared.join(sizes, id_col).select(
-            F.col(id_col),
-            F.col("n_shared"),
-            (F.col("n_shared").cast("double") / F.col("__n").cast("double")).alias(
-                "contamination"
-            ),
-        )
-
-    if not eager:
-        return report_plan(base)
-    hit = _memo_lookup(report_plan(base))
-    if hit is not None:
-        return hit
-    base = base.persist()
-    # The report stays LAZY — the caller's terminal action (count / collect
-    # / write) materializes it through the persisted projection, and the
-    # persist marks it for reuse by the next same-corpus call.
-    out = report_plan(base).persist()
-    _DECON_MEMO.extend([out, base])
-    return out
+    if eager:
+        base = eager_cut(base)
+    train_sh = (
+        base.filter(F.col("__split") == "train")
+        .select(F.col(id_col), F.explode("__shs").alias("__sh"))
+    )
+    # NO broadcast hint, deliberately (review round 6): with the
+    # hash_split eval side this vocabulary is ~20% of the corpus'
+    # distinct shingles — a forced broadcast dies at the 8 GB cap /
+    # OOMs the driver exactly at the 100 TB design point. AQE
+    # converts the join to a broadcast at runtime from its MEASURED
+    # size, which is the safe version of the same optimization (and
+    # the production decontamination case — a fixed small benchmark
+    # suite as the eval side — still gets the broadcast from AQE).
+    eval_sh = (
+        base.filter(F.col("__split") == "eval")
+        .select(F.explode("__shs").alias("__sh"))
+        .distinct()
+    )
+    sizes = base.filter(F.col("__split") == "train").select(
+        F.col(id_col), F.size("__shs").alias("__n")
+    )
+    shared = (
+        train_sh.join(eval_sh, "__sh")
+        .groupBy(id_col)
+        .agg(F.count("*").alias("n_shared"))
+    )
+    return shared.join(sizes, id_col).select(
+        F.col(id_col),
+        F.col("n_shared"),
+        (F.col("n_shared").cast("double") / F.col("__n").cast("double")).alias(
+            "contamination"
+        ),
+    )
 
 
 def _quality_exact(docs: DataFrame, quality_min: float) -> DataFrame:

@@ -52,14 +52,3 @@ def get_spark(app_name: str = "data_transform_make_spark", cpus: int | None = No
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def pin_session_conf(spark: SparkSession) -> SparkSession:
-    """Pin runtime-mutable conf we rely on, on an externally-created session.
-
-    The driver owns the session used for correctness runs; these are the
-    runtime-settable invariants our queries assume (UTC timestamps so the
-    DuckDB oracle sees the same instants; AQE on for skew/coalesce).
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return spark

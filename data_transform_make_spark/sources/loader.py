@@ -12,8 +12,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import pin_session_conf
-
 TABLES = (
     "region",
     "nation",
@@ -55,43 +53,29 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # with in-place part rewrites, fold the max part-file mtime into the key.
 _SCHEMA_MEMO: dict[tuple, object] = {}
 
-# Conf-pin flag attribute set on the SparkSession once its four runtime
-# invariants (UTC session TZ, AQE on, legacy nanos-as-long parquet read,
-# NTZ inference off) have been pinned (r21 optimization; r20 "not yet
-# optimized" #3). Each ``spark.conf.set`` is a py4j round-trip and
-# ``load_table`` runs 1-6 times INSIDE every timed query — the four
-# per-call sets summed to ~0.2-0.25 s across a bench pass while writing
-# the same values every time. The pin is now once per session object
-# (the same pattern as ``sc._dtm_checkpoint_root``): a fresh session —
-# the driver's vanilla session, each bench-pass subprocess — pays it
-# exactly once.
-#
-# CONTRACT (the invalidation hook): the per-call re-pin used to silently
-# repair a caller who mutated one of the pinned confs between queries.
-# That repair was never a documented API — the engine's own queries all
-# assume the pinned values end-to-end — but a caller who deliberately
-# mutates them can restore the old behavior by calling
-# :func:`unpin_session_conf` afterwards, which forces the next
-# ``load_table`` to re-pin. ``tests/test_loader_conf_pin.py`` pins both
-# directions (skip-when-pinned, re-pin-after-unpin).
-_PIN_ATTR = "_dtm_conf_pinned"
+# The runtime invariants every load_table caller relies on, pinned here
+# because the driver owns the session: UTC session TZ (the DuckDB oracle
+# sees the same instants), AQE on (skew/coalesce), legacy nanos-as-long
+# parquet read and NTZ inference off (the ``ts`` normalization below).
+_PINNED_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
 
 
-def _pin_once(spark: SparkSession) -> None:
-    if getattr(spark, _PIN_ATTR, False):
-        return
-    pin_session_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    setattr(spark, _PIN_ATTR, True)
+def _repair_conf(spark: SparkSession) -> None:
+    """Verify the four invariants and ``set`` only the ones that differ, so
+    a caller who mutated one between queries is repaired on the next
+    ``load_table`` while an already-pinned session pays reads only.
 
-
-def unpin_session_conf(spark: SparkSession) -> None:
-    """Invalidate the once-per-session conf pin: the next ``load_table``
-    on this session re-pins all four runtime invariants. Call after
-    deliberately mutating session TZ / AQE / legacy-parquet confs."""
-    if getattr(spark, _PIN_ATTR, False):
-        setattr(spark, _PIN_ATTR, False)
+    Four ``conf.get`` reads rather than one ``conf.getAll``: getAll builds
+    its dict over a py4j map proxy, one round-trip per entry (measured
+    ~18 ms per call against ~0.3 ms for the four reads on a 4-vCPU VM)."""
+    for key, value in _PINNED_CONF.items():
+        if spark.conf.get(key, None) != value:
+            spark.conf.set(key, value)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -110,11 +94,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     fallback for frames built before the conf applies).
 
     The inferred schema is memoized per (path, size, mtime) — see
-    ``_SCHEMA_MEMO`` above; the conf pin is once per session — see
-    ``_PIN_ATTR``/``unpin_session_conf`` above — so a memoized schema is
+    ``_SCHEMA_MEMO`` above; every call first verifies and repairs the
+    four pinned confs (:func:`_repair_conf`), so a memoized schema is
     decoded under exactly the conf it was inferred under.
     """
-    _pin_once(spark)
+    _repair_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(path)

@@ -86,58 +86,22 @@ def merge_upsert_path(
     keys: list[str],
     update_cols: list[str] | None = None,
     insert_unmatched: bool = True,
-) -> str:
-    """MERGE a source frame into a STORED table at ``path`` — the thin
-    adapter over the two execution paths (returns which one ran):
-
-    * ``"delta"``: when the ``delta-spark`` package is importable AND the
-      path already is a Delta table, issue a real ``MERGE INTO`` through
-      ``DeltaTable.merge`` — ACID, file-level conflict detection,
-      exactly-once per ``foreachBatch`` when keyed idempotently. This is
-      the 100 TB production path (makeRouter.js:120-124/198-202's
-      read-modify-write PUTs, made transactional).
-    * ``"parquet"``: jar-less fallback (this container) — read the parquet
-      table, apply the :func:`merge_upsert` emulation (same WHEN MATCHED /
-      NOT MATCHED semantics, no ACID), write to a sibling tmp dir and
-      swap. The rename window is the caller's race to manage; that gap is
-      exactly what Delta's log removes.
-
-    Both paths produce identical table contents for the same inputs
-    (asserted by tests/test_sinks_skew.py, Delta leg gated on
-    importability).
+) -> None:
+    """MERGE a source frame into a STORED parquet table at ``path``: read
+    the table, apply the :func:`merge_upsert` emulation (same WHEN MATCHED
+    / NOT MATCHED semantics, no ACID), write to a sibling tmp dir and
+    swap. The rename window is the caller's race to manage; on a cluster,
+    Delta's ``MERGE INTO`` replaces this read-merge-swap with one
+    transactional statement (makeRouter.js:120-124/198-202's
+    read-modify-write PUTs, made transactional).
     """
-    if update_cols is None:
-        update_cols = [c for c in source.columns if c not in keys]
-    # before ANY read of the path (Delta probe or parquet analysis):
-    # restore the sole surviving copy of a mid-swap crash, else the
-    # spark.read below fails before _swap_parquet's own recovery can run
+    # before ANY read of the path: restore the sole surviving copy of a
+    # mid-swap crash, else the spark.read below fails before
+    # _swap_parquet's own recovery can run
     _recover_swap_debris(path)
-    try:
-        from delta.tables import DeltaTable  # type: ignore
-
-        have_delta = True
-    except ImportError:
-        have_delta = False
-
-    if have_delta and DeltaTable.isDeltaTable(spark, path):
-        t = DeltaTable.forPath(spark, path)
-        cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-        m = (
-            t.alias("t")
-            .merge(source.alias("s"), cond)
-            .whenMatchedUpdate(set={c: f"s.{c}" for c in update_cols})
-        )
-        if insert_unmatched:
-            m = m.whenNotMatchedInsert(
-                values={c: f"s.{c}" for c in source.columns}
-            )
-        m.execute()
-        return "delta"
-
     target = spark.read.parquet(path)
     merged = merge_upsert(target, source, keys, update_cols, insert_unmatched)
     _swap_parquet(merged, path, "__merge_tmp")
-    return "parquet"
 
 
 def _recover_swap_debris(path: str) -> bool:

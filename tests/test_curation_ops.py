@@ -419,12 +419,6 @@ class TestCacheHygiene:
     register in the CacheManager.)"""
 
     def _cache_empty(self, spark):
-        # drain the decontamination memo first: it legitimately holds one
-        # bounded slot across calls (tested below) and earlier tests in the
-        # session may have populated it
-        from data_transform_make_spark.plans import training_corpus as tc
-
-        tc.release_decontamination_cache()
         return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     def test_minhash_lsh_pairs_releases_signature_cache(self, spark):
@@ -438,38 +432,24 @@ class TestCacheHygiene:
         out.count()
         assert self._cache_empty(spark)
 
-    def test_decontamination_report_bounded_memo(self, spark):
-        """decontamination_report keeps a ONE-SLOT memo of the shingled
-        projection: same-corpus re-runs reuse it (bounded, not a leak),
-        a different corpus evicts the previous slot, and the explicit
-        release API empties the cache entirely."""
-        from data_transform_make_spark.plans import training_corpus as tc
+    def test_decontamination_report_leaves_no_cache(self, spark):
+        """decontamination_report holds nothing after the call: its
+        shingled projection is an eager lineage cut, not a persist, and
+        there is no result memo — two calls over one corpus each compute
+        the report and agree."""
+        from data_transform_make_spark.plans.training_corpus import (
+            decontamination_report,
+        )
 
-        docs_a = spark.createDataFrame(
-            [(i, "the quick brown fox jumps again") for i in range(1, 20)],
+        docs = spark.createDataFrame(
+            [(i, f"the quick brown fox {i % 5} jumps again") for i in range(1, 40)],
             "doc_id long, text string",
         )
-        docs_b = spark.createDataFrame(
-            [(i, "a completely different corpus of words") for i in range(1, 20)],
-            "doc_id long, text string",
-        )
-        tc.release_decontamination_cache()
+        r1 = sorted(decontamination_report(docs).collect())
         assert self._cache_empty(spark)
-        r1 = tc.decontamination_report(docs_a).count()
-        assert len(tc._DECON_MEMO) == 2  # (report, projection) pair
-        memo_report = tc._DECON_MEMO[0]
-        # same corpus again: the CACHED REPORT ITSELF is returned
-        assert tc.decontamination_report(docs_a) is memo_report
-        r2 = tc.decontamination_report(docs_a).count()
-        assert r1 == r2
-        # different corpus: previous pair evicted, exactly one pair remains
-        tc.decontamination_report(docs_b).count()
-        assert len(tc._DECON_MEMO) == 2
-        assert tc._DECON_MEMO[0] is not memo_report
-        assert not memo_report.is_cached
-        # explicit release empties the CacheManager
-        tc.release_decontamination_cache()
+        r2 = sorted(decontamination_report(docs).collect())
         assert self._cache_empty(spark)
+        assert r1 and r1 == r2
 
     def test_training_corpus_builders_release_cache(self, spark, sf_dir):
         from data_transform_make_spark.sources.loader import load_table

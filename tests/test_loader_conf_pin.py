@@ -1,46 +1,29 @@
-"""Pins for the once-per-session conf pin in sources.loader (r21).
+"""Pins for the verify-and-repair conf step in sources.loader.
 
-The four runtime invariants (UTC TZ, AQE on, nanosAsLong, NTZ inference
-off) are written once per session object instead of on every
-``load_table`` call (each ``conf.set`` is a py4j round-trip inside the
-timed region). The invalidation hook ``unpin_session_conf`` restores the
-old per-call repair for callers who deliberately mutate pinned confs.
+Every ``load_table`` call reads the four runtime invariants (UTC TZ, AQE
+on, nanosAsLong, NTZ inference off) and sets only the ones that differ,
+so a caller who mutates one between queries is repaired by the next call
+instead of having memoized schemas decoded under a different conf.
 """
 
-from data_transform_make_spark.sources.loader import (
-    _PIN_ATTR,
-    load_table,
-    unpin_session_conf,
-)
+from data_transform_make_spark.sources.loader import _PINNED_CONF, load_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_pin_set_once_and_skipped_when_pinned(spark):
-    unpin_session_conf(spark)
+def test_load_table_repairs_mutated_session_conf(spark):
     load_table(spark, SF_DIR, "region")
-    assert getattr(spark, _PIN_ATTR) is True
-    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
-    assert (
-        spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false"
-    )
-    # pinned session: load_table does NOT overwrite a caller's mutation
-    # (that is the documented once-per-session contract)
+    for key, value in _PINNED_CONF.items():
+        assert spark.conf.get(key) == value
     try:
         spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
-        load_table(spark, SF_DIR, "region")
-        assert spark.conf.get("spark.sql.session.timeZone") == "Asia/Kolkata"
-        # ... until the caller invalidates, after which the next call re-pins
-        unpin_session_conf(spark)
+        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         load_table(spark, SF_DIR, "region")
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert (
+            spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+            == "false"
+        )
     finally:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-def test_unpin_is_idempotent_on_fresh_session(spark):
-    unpin_session_conf(spark)
-    unpin_session_conf(spark)  # no flag set: must not raise
-    load_table(spark, SF_DIR, "region")
-    assert getattr(spark, _PIN_ATTR) is True
+        for key, value in _PINNED_CONF.items():
+            spark.conf.set(key, value)

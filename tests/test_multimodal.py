@@ -59,50 +59,6 @@ def test_resize_stub_dims_and_payload(spark, sf_dir):
     assert all(64 <= r.width < 256 for r in out)  # source dims carried through
 
 
-def test_kernel_adapter_selection():
-    """'pil' must refuse without Pillow; 'auto' must fall back to the stub;
-    unknown names rejected."""
-    import pytest
-
-    from data_transform_make_spark.multimodal import columns as mc
-
-    if mc._HAVE_PIL:
-        assert mc._pick_kernel("pil") is mc._pil_decode
-        assert mc._pick_kernel("auto") is mc._pil_decode
-    else:
-        with pytest.raises(ImportError):
-            mc._pick_kernel("pil")
-        assert mc._pick_kernel("auto") is mc._stub_decode
-    assert mc._pick_kernel("stub") is mc._stub_decode
-    with pytest.raises(ValueError):
-        mc._pick_kernel("ffmpeg")
-
-
-def test_real_pil_decode_when_available(spark):
-    """Import-gated real-kernel leg: a genuine PNG through the identical
-    mapInPandas plumbing must report its true dimensions (and undecodable
-    payloads the (0,0,0) dead-letter convention)."""
-    import io
-
-    import pytest
-
-    PIL = pytest.importorskip("PIL")
-    from PIL import Image
-
-    from data_transform_make_spark.multimodal.columns import decode_images
-
-    buf = io.BytesIO()
-    Image.new("RGB", (12, 7)).save(buf, format="PNG")
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(buf.getvalue())), (2, "image", bytearray(b"not an image"))],
-        "media_id long, media_type string, payload binary",
-    )
-    out = {r.media_id: (r.width, r.height, r.n_channels)
-           for r in decode_images(media, kernel="pil").collect()}
-    assert out[1] == (12, 7, 3)
-    assert out[2] == (0, 0, 0)
-
-
 def test_degenerate_multimodal_params_rejected(spark):
     """Round-9 review (the r8 degenerate-parameter class): every_n_bytes=0
     divided the payload length inside the executor task (remote

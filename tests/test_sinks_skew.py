@@ -31,47 +31,28 @@ def test_merge_upsert_no_insert(spark):
     assert out == {"I1": 2}
 
 
-def _merge_path_fixture(spark, tmp_path, fmt):
+def test_merge_upsert_path_parquet_fallback(spark, tmp_path):
     from data_transform_make_spark.sources.sinks import merge_upsert_path
 
-    path = str(tmp_path / f"inv_{fmt}")
-    target = spark.createDataFrame(
+    path = str(tmp_path / "inv")
+    spark.createDataFrame(
         [("I1", 10, "Tote"), ("I2", 5, "Duffel"), ("I3", 7, "Mini")],
         "inventory_id string, stock int, bag_model string",
-    )
-    if fmt == "delta":
-        target.write.format("delta").save(path)
-    else:
-        target.write.parquet(path)
+    ).write.parquet(path)
     source = spark.createDataFrame(
         [("I1", 8), ("I4", 99)], "inventory_id string, stock int"
     )
-    ran = merge_upsert_path(spark, path, source, ["inventory_id"])
-    assert ran == fmt
+    merge_upsert_path(spark, path, source, ["inventory_id"])
     out = {
         r.inventory_id: (r.stock, r.bag_model)
-        for r in spark.read.format(fmt if fmt == "delta" else "parquet")
-        .load(path)
-        .collect()
+        for r in spark.read.parquet(path).collect()
     }
-    # identical contents contract across both adapter paths
     assert out == {
         "I1": (8, "Tote"),
         "I2": (5, "Duffel"),
         "I3": (7, "Mini"),
         "I4": (99, None),
     }
-
-
-def test_merge_upsert_path_parquet_fallback(spark, tmp_path):
-    _merge_path_fixture(spark, tmp_path, "parquet")
-
-
-def test_merge_upsert_path_delta_when_available(spark, tmp_path):
-    import pytest
-
-    pytest.importorskip("delta")
-    _merge_path_fixture(spark, tmp_path, "delta")
 
 
 def test_swap_parquet_leaves_no_residue_on_success(spark, tmp_path):
@@ -181,8 +162,7 @@ def test_merge_upsert_path_recovers_mid_swap_crash_state(spark, tmp_path):
     os.rename(path, path + "__old")
 
     source = spark.createDataFrame([("I1", 8)], "inventory_id string, stock int")
-    ran = merge_upsert_path(spark, path, source, ["inventory_id"])
-    assert ran == "parquet"
+    merge_upsert_path(spark, path, source, ["inventory_id"])
     out = {r.inventory_id: r.stock for r in spark.read.parquet(path).collect()}
     assert out == {"I1": 8, "I2": 5}
     assert not os.path.exists(path + "__old")
@@ -244,7 +224,7 @@ def test_recovery_interleaved_with_concurrent_writer_fresh_tmp(spark, tmp_path):
         [("ZZ", 1)], "inventory_id string, stock int"
     ).write.parquet(path2 + "__tmp")
     source = spark.createDataFrame([("I1", 8)], "inventory_id string, stock int")
-    assert merge_upsert_path(spark, path2, source, ["inventory_id"]) == "parquet"
+    merge_upsert_path(spark, path2, source, ["inventory_id"])
     out = {r.inventory_id: r.stock for r in spark.read.parquet(path2).collect()}
     assert out == {"I1": 8, "I2": 5}
     assert {r.inventory_id for r in spark.read.parquet(path2 + "__tmp").collect()} == {

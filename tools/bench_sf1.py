@@ -56,21 +56,16 @@ def main() -> int:
     from data_transform_make_spark import corpus
     from data_transform_make_spark.session import get_spark
 
-    sys.path.insert(0, REPO)
-    import bench
-
     spark = get_spark("bench-sf1")
     qs = corpus.queries()
     spark.sparkContext.setJobDescription("sf1 warmup")
     qs["p1_status_gate"](spark, SF1_DIR).count()
     out: dict[str, float] = {}
     for name in names:
-        bench._reset_memo(name)
         spark.sparkContext.setJobDescription(f"sf1 {name} warm")
         qs[name](spark, SF1_DIR).count()
         runs = []
         for i in range(RUNS):
-            bench._reset_memo(name)
             spark.sparkContext.setJobDescription(f"sf1 {name} run{i}")
             t0 = time.perf_counter()
             qs[name](spark, SF1_DIR).count()

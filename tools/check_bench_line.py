@@ -54,26 +54,45 @@ def synthetic_line() -> str:
     )
 
 
+def warm_section(tail: str) -> dict | None:
+    """The warm ``queries`` map inside ``tail``, or None if it was cut.
+
+    Locates the LAST ``"queries"`` key and decodes the balanced object
+    after it with ``json.JSONDecoder.raw_decode``, so any separators or
+    key order parse. The regex is only the fallback for a tail whose
+    object is itself truncated: it recovers the cells that did survive."""
+    key = tail.rfind('"queries"')
+    if key < 0:
+        return None
+    m = re.compile(r'"queries"\s*:\s*').match(tail, key)
+    if m is None:
+        return None
+    try:
+        obj, _ = json.JSONDecoder().raw_decode(tail, m.end())
+    except json.JSONDecodeError:
+        return dict(
+            (k, float(v))
+            for k, v in re.findall(r'"([^"]+)"\s*:\s*([0-9.eE+-]+)', tail[m.end():])
+        )
+    return obj if isinstance(obj, dict) else None
+
+
 def check(line: str) -> int:
     tail = line[-TAIL_CHARS:]
     problems = []
-    m = re.search(r'"queries": \{([^}]*)\}', tail)
-    if not m:
+    cells = warm_section(tail)
+    if cells is None:
         problems.append("warm \"queries\" section does not survive the tail cut")
     else:
-        cells = dict(
-            (k, float(v))
-            for k, v in re.findall(r'"([^"]+)": ([0-9.eE+-]+)', m.group(1))
-        )
         missing = [n for n in bench.HEADLINE if n not in cells]
         if missing:
             problems.append(
                 f"warm cells missing from the tail: {missing[:5]}"
                 f"{'...' if len(missing) > 5 else ''}"
             )
-    for field in ('"value":', '"sf":', '"pass_totals":'):
-        if field not in tail:
-            problems.append(f"{field} does not survive the tail cut")
+    for field in ("value", "sf", "pass_totals"):
+        if not re.search(rf'"{field}"\s*:', tail):
+            problems.append(f'"{field}" does not survive the tail cut')
     print(f"line={len(line)} chars, tail budget={TAIL_CHARS}")
     if problems:
         for p in problems:

@@ -119,8 +119,8 @@ def main() -> int:
     failures: dict[str, list[str]] = {}
     for name, fn in sorted(qs.items()):
         try:
-            # entries whose default path eagerly materializes through a
-            # scoped-cache localCheckpoint (d3, dec1, ll1-ll3, since r10
+            # entries whose default path eagerly materializes through an
+            # eager_cut localCheckpoint (d3, dec1, ll1-ll3, since r10
             # bm25_1 and d2, and since r11 d2b and d3b — the r9 fold had
             # left them reporting scans=0) expose eager=False: the
             # identical composed plan, fully lazy, so the audit sees the

@@ -1,8 +1,7 @@
 """Extend the round-8 sf0.1 -> sf1.0 scaling evidence beyond ll1/ll2/ll3
 to the dedup/curation family the 100 TB posture leans on. Same corpus
 (tools/gen_scale_docs.py), same protocol (one session, one warmup,
-min-of-3 steady-state per cell). dec1's one-slot memo is released before
-every timed run, as in bench.py, so the cell measures the operator.
+min-of-3 steady-state per cell).
 
 Prints one JSON line prefixed SCALING_FAMILY_RESULT:.
 
@@ -19,8 +18,8 @@ against a 1-file series. Default output is stamped ``"layout":
 "single_file"`` — future ledger tables must match layouts before
 comparing.
 
-dec1's cells are COLD-PATH cells (the memo release forces the
-checkpoint write every run) and the write cost swings ~3x with the
+dec1's cells pay the projection's checkpoint write every run, and
+the write cost swings ~3x with the
 box's disk state: three clean sessions read the sf0.1 cell at
 1.23 / 3.63 / 1.40 s while sf1.0 stayed flat (SCALE.md round 12 —
 the retracted r11 drift alarm). Its cells are therefore only
@@ -36,9 +35,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_transform_make_spark import corpus  # noqa: E402
-from data_transform_make_spark.plans.training_corpus import (  # noqa: E402
-    release_decontamination_cache,
-)
 from data_transform_make_spark.session import get_spark  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
@@ -100,8 +96,6 @@ def main() -> None:
 
     def run_min3(name, sf_dir):
         def f():
-            if name == "dec1_decontamination":
-                release_decontamination_cache()
             qs[name](spark, sf_dir).count()
 
         f()  # warmup

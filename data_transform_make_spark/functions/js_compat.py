@@ -10,9 +10,9 @@ Spark's ANSI casts do NOT replicate (SURVEY.md §7.4):
   skip rows (makeRouter.js:94) and to default values (``|| ""`` at
   makeRouter.js:63,67-72).
 
-Everything here is a pure Column expression — JVM-side, codegen'd, no Python
-in the data path — so the helpers cost the same as hand-written SQL at any
-scale.
+Everything here is a pure Column expression (or, for ``js_parse_int_sql``,
+its SQL text) — JVM-side, codegen'd, no Python in the data path — so the
+helpers cost the same as hand-written SQL at any scale.
 """
 
 from __future__ import annotations
@@ -56,6 +56,19 @@ def js_parse_int(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     tok = F.nullif(F.regexp_extract(c.cast("string"), _LEADING_INT, 1), F.lit(""))
     return tok.try_cast("long")
+
+
+def js_parse_int_sql(arg: str) -> str:
+    """:func:`js_parse_int` as Spark SQL text over the SQL expression
+    ``arg`` — for stages built as one expression string, which costs one
+    py4j call where the Column API costs one per operator. The regex is
+    the same ``_LEADING_INT``, with its backslashes doubled for the SQL
+    string literal (Spark SQL reads ``'\\d'`` as ``d``)."""
+    pattern = _LEADING_INT.replace("\\", "\\\\")
+    return (
+        f"try_cast(nullif(regexp_extract(CAST({arg} AS STRING), '{pattern}', 1), '')"
+        " AS BIGINT)"
+    )
 
 
 def js_str_falsy(col: Column | str) -> Column:

@@ -10,7 +10,9 @@ The engine re-expresses it with real streaming semantics:
   * ``dropDuplicatesWithinWatermark`` for cross-batch idempotency — the
     upgrade the reference lacks
   * ``foreachBatch`` applying the §3.1 order pipeline per micro-batch (the
-    MERGE-per-batch execution model; with Delta this is an ACID MERGE)
+    MERGE-per-batch execution model: each epoch's post-state is written to
+    its own parquet directory and read back as the next epoch's input —
+    the only state path; there is no Delta sink)
 
 All helpers run the query to completion synchronously (memory sink +
 ``processAllAvailable``) so batch oracles can check the results.
@@ -390,19 +392,27 @@ def _checkpointed_state_pipeline(
     state_dir: str | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """foreachBatch with a parquet-checkpointed state carry — the Delta-less
-    MERGE-per-batch emulation.
+    """foreachBatch with a parquet-checkpointed state carry — the
+    MERGE-per-batch execution model.
 
     Each micro-batch applies ``apply_fn(batch_df, current_inventory)`` and
     writes the post-state to a fresh per-epoch parquet target; the next
-    batch reads it back. The state table never rides through the driver
-    (the old ``collect()``/``createDataFrame`` carry was a driver OOM at
-    scale), lineage is cut at every epoch (the read is a fresh scan, not a
-    plan stacked on all previous batches), and the epoch just consumed is
+    batch reads it back with the schema just written (no inference job,
+    no footer read). This epoch write and read-back is the only state
+    path. The state table never rides through the driver (the old
+    ``collect()``/``createDataFrame`` carry was a driver OOM at scale),
+    lineage is cut at every epoch (the read is a fresh scan, not a plan
+    stacked on all previous batches), and the epoch just consumed is
     deleted after its successor is durably written — bounded storage, ≤ 2
-    epochs live at any instant. With Delta jars present the write/read pair
-    collapses to ``MERGE INTO`` on one target table; the call sites are
-    unchanged.
+    epochs live at any instant.
+
+    Empty batches: every micro-batch Spark delivers is applied, with no
+    emptiness probe (a probe is one more job that re-reads the batch's
+    input). A batch with no rows — for example one whose bodies were all
+    dead-lettered upstream — applies zero changes, so its post-state is
+    the current state after ``apply_fn``'s per-row normalization (NULL
+    counters read ``parseInt(x || 0)`` = 0), exactly as for a batch whose
+    rows all fall through ``apply_fn``'s filters.
 
     ``checkpoint_dir``: a Structured Streaming ``checkpointLocation``.
     With it, source offsets are committed durably — a RESTARTED run over
@@ -541,8 +551,6 @@ def _checkpointed_state_pipeline(
     state = {"inventory": inventory, "epoch_path": None}
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         path = os.path.join(state_dir, f"epoch_{epoch_id}")
         # idempotent replay guard: foreachBatch is at-least-once — after
         # a crash between the write below and the offset commit, Spark
@@ -575,7 +583,7 @@ def _checkpointed_state_pipeline(
         if os.path.exists(path):
             shutil.rmtree(path, ignore_errors=True)
         os.rename(tmp, path)
-        state["inventory"] = spark.read.parquet(path)
+        state["inventory"] = spark.read.schema(post.schema).parquet(path)
         state["epoch_path"] = path
         if prev is not None and prev != path:
             # fully consumed by the write just completed
@@ -629,8 +637,8 @@ def streaming_order_pipeline(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """§3.1 as a stream: foreachBatch applies the batch order pipeline per
-    micro-batch and MERGEs the post-state into a parquet-checkpointed
-    target (stand-in for a Delta ACID MERGE sink — Delta jars absent in v1).
+    micro-batch and writes the post-state to that epoch's parquet
+    directory, which the next micro-batch reads back (the only state path).
 
     Returns the final inventory post-state after all batches (a lazy scan
     of the last epoch's parquet checkpoint — never driver-materialized).

@@ -1,7 +1,8 @@
 """Property + example tests for the JS-coercion helpers (SURVEY.md §7.4.1-2).
 
-The hypothesis property test cross-checks js_parse_int against a Python
-reimplementation of JS parseInt on arbitrary strings.
+The hypothesis property test cross-checks js_parse_int, in its Column and
+its SQL-text form, against a Python reimplementation of JS parseInt on
+arbitrary strings.
 """
 
 import re
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 from data_transform_make_spark.functions.js_compat import (
     default_if_falsy,
     js_parse_int,
+    js_parse_int_sql,
     js_str_falsy,
     qty_falsy,
 )
@@ -61,9 +63,14 @@ def test_js_parse_int_examples(spark):
 @settings(max_examples=20, deadline=None)
 @given(st.lists(st.text(max_size=12), min_size=1, max_size=30))
 def test_js_parse_int_property(spark_global, strings):
+    """The Column form and the SQL-text form (js_parse_int_sql) both."""
     df = spark_global.createDataFrame([(s,) for s in strings], "s string")
-    got = [r.v for r in df.select(F.col("s"), js_parse_int("s").alias("v")).collect()]
-    assert got == [py_js_parse_int(s) for s in strings]
+    rows = df.select(
+        js_parse_int("s").alias("v"), F.expr(js_parse_int_sql("s")).alias("w")
+    ).collect()
+    want = [py_js_parse_int(s) for s in strings]
+    assert [r.v for r in rows] == want
+    assert [r.w for r in rows] == want
 
 
 # hypothesis can't take the pytest fixture directly; module-level session

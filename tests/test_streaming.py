@@ -276,6 +276,90 @@ def test_streaming_order_pipeline_multi_epoch(spark, tmp_path):
     assert len(epochs) == 1, f"consumed epochs must be cleaned up, found {epochs}"
 
 
+def _raw_order_stream(spark, src):
+    """Raw order bodies -> ingest -> the parsed leg, one file per
+    micro-batch in file-mtime order."""
+    from data_transform_make_spark.sources.ingest import ingest_with_reason
+
+    body = T.StructType([WEBHOOKS["status"], WEBHOOKS["line_items"]])
+    raw = (
+        spark.readStream.schema("webhook_id long, raw_body string")
+        .option("maxFilesPerTrigger", 1)
+        .json(src)
+    )
+    return (
+        ingest_with_reason(raw, body)
+        .where(F.col("record").isNotNull())
+        .select("webhook_id", "record.status", "record.line_items")
+    )
+
+
+def _write_bodies(src, name, rows, mtime):
+    import json
+    import os
+
+    os.makedirs(src, exist_ok=True)
+    path = os.path.join(src, name)
+    with open(path, "w") as fh:
+        for wid, body in rows:
+            fh.write(json.dumps({"webhook_id": wid, "raw_body": body}) + "\n")
+    os.utime(path, (mtime, mtime))
+
+
+def test_streaming_order_all_dead_letter_batch_applies_nothing(spark, tmp_path):
+    """A micro-batch whose bodies are all dead-lettered applies like any
+    other batch: zero lines, counters read parseInt(x || 0). Before a
+    normal batch it leaves the final state unchanged; on its own it only
+    normalizes the NULL counter."""
+    inventory = spark.createDataFrame(
+        [("I1", "Tote", 10, None), ("I2", "Duffel", 5, 1)], INVENTORY
+    )
+    dead = [(1, "{bad"), (2, "[1, 2]"), (3, "not json")]
+    good = [
+        (4, '{"status": "Approved", "line_items": [{"inventory_id": "I1",'
+            ' "bag_model_website": "Tote", "qty_website": "3"}]}'),
+    ]
+
+    def run(src, files):
+        for i, (name, rows) in enumerate(files):
+            _write_bodies(src, name, rows, 1_700_000_000 + 100 * i)
+        post = streaming_order_pipeline(spark, _raw_order_stream(spark, src), inventory)
+        return {r.inventory_id: (r.general_stock_qty, r.qty_office) for r in post.collect()}
+
+    both = run(str(tmp_path / "both"), [("a.json", dead), ("b.json", good)])
+    alone = run(str(tmp_path / "alone"), [("b.json", good)])
+    assert both == alone == {"I1": (7, 3), "I2": (5, 1)}
+    assert run(str(tmp_path / "dead"), [("a.json", dead)]) == {
+        "I1": (10, 0),
+        "I2": (5, 1),
+    }
+
+
+def test_streaming_order_pipeline_returns_the_written_schema(spark, tmp_path):
+    """The post-state is read back with the schema of the frame that was
+    written — ``order_webhook_pipeline(...).updated_inventory`` — not one
+    inferred from the files. File sources read every field as nullable,
+    so the comparison is on names and types."""
+    from data_transform_make_spark.plans.order_pipeline import order_webhook_pipeline
+
+    src = str(tmp_path / "webhooks")
+    spark.createDataFrame(
+        [(1, "Approved", [("I1", "Tote", "3")])], WEBHOOKS
+    ).coalesce(1).write.parquet(src)
+    inventory = spark.createDataFrame([("I1", "Tote", 10, 0)], INVENTORY)
+    post = streaming_order_pipeline(
+        spark, spark.readStream.schema(WEBHOOKS).parquet(src), inventory
+    )
+    want = order_webhook_pipeline(
+        spark.read.schema(WEBHOOKS).parquet(src), inventory
+    ).updated_inventory.schema
+
+    def shape(schema):
+        return [(f.name, f.dataType) for f in schema]
+
+    assert shape(post.schema) == shape(want)
+
+
 def test_streaming_process_pipeline(spark, tmp_path):
     from data_transform_make_spark.streaming.pipelines import streaming_process_pipeline
 
